@@ -25,9 +25,9 @@ is proven against the fixtures' pure-Python simulator in tests.
 
 from __future__ import annotations
 
-import os
 import time
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -40,6 +40,47 @@ from ..storage.backend import SnapshotStore
 
 POSTS_KEY = ["stock_code", "content_type", "url_id"]
 
+# Strategy thresholds.  No caller tunes these per run, so they are module
+# constants; an A/B study monkeypatches the constant (run_crawl reads each
+# one at call time).
+
+# SIZE-AWARE broadcast cap (r6 verdict item 1, adjudicated by the r7
+# 4x-corpus ABAB — BENCH/fetch_abab_r7.json): a politeness-bounded batch
+# (list wave, comment wave) with more rows than this falls back to the
+# shuffle join even when bounded_fetch_broadcast is on.  The broadcast build
+# (driver collect + hash relation + ship) is SERIAL, so past ~0.5M rows it
+# dominates and INVERTS with core count (r6b at the 4x corpus: the one
+# 1.7M-row wave read 66 s at 4c but 103 s at 16c broadcast, vs 48 s SMJ)
+# while small waves broadcast strictly faster (r6c 1x ABAB, 0.43M rows).
+# Neither constant strategy can be right at 100x; the row count of every
+# wave batch is already known (the politeness count) so the choice is free.
+BROADCAST_MAX_ROWS = 500_000
+# text_fetch_mode="auto" crossover on the MEASURED mean html bytes of
+# previous rounds (manifest meta "mean_text_bytes"): the fat-html study
+# (BENCH/fat_html_modes.json) showed scan_extract 2.75x faster at 56 KB
+# pages while join wins at 3 KB
+SCAN_EXTRACT_BYTES_THRESHOLD = 16384
+# text-merge join strategy crossover: past this many fetched texts the
+# commit-time posts ⋈ texts join is hinted shuffled-hash (both sides are
+# same-key round deltas — sort order buys nothing and SMJ sorts the text
+# payload rows; measured 7.3 → 6.2 s on a 1.44M-row delta); below it the
+# hint is withheld so Catalyst broadcasts the tiny text side
+SHJ_TEXT_MERGE_THRESHOLD = 100_000
+# ... and ABOVE this estimated per-partition build size the hint is withheld
+# again: a shuffled-hash build that does not fit execution memory is a hard
+# SparkOutOfMemoryError, not a spill (guide §3.1) — measured at the r7 8x
+# corpus (11.5M texts / 32 shuffle partitions ≈ 700 MB per build) where the
+# round died in the commit; SMJ spills gracefully there.
+SHJ_BUILD_BUDGET_BYTES = 256 * 1024 * 1024
+# bloom front-filter false-positive rate (seen_bloom and posts_bloom); part
+# of the persisted index geometry, so a change forces one rebuild
+BLOOM_FPP = 0.01
+MAX_WAVES = 64
+DUPLICATE_PAGE_THRESHOLD = 2  # core/crawler.py:104
+# X9 start year: the reference seeds inference with datetime.now().year
+# (archive/main_class.py:765); fixed here for reproducibility
+INFERENCE_START_YEAR = 2026
+
 
 @dataclass
 class CrawlConfig:
@@ -49,25 +90,22 @@ class CrawlConfig:
     budget_per_host: int = 1_000_000_000  # list pages per host per wave (P1/P3)
     text_budget_per_host: int = 0  # depth-1 fetches per host per round (P2
     # QPS-cap analog, archive/full_text_CrawlerAsync.py:152); 0 ⇒ budget_per_host
-    duplicate_page_threshold: int = 2  # core/crawler.py:104
     max_attempts: int = 5  # core/crawler.py:496 (tenacity budget)
-    apply_robots: bool = True
     use_bloom: bool = True
-    bloom_fpp: float = 0.01
     # approximate-membership front-filter flavor: "bloom" (default) or
     # "cuckoo" (north-star structure: delete-capable, ~1 byte/key at 95%
     # load — operators/cuckoo.py); both share the cogrouped probe shape and
     # the exact anti-join confirms suspects either way
     seen_filter: str = "bloom"
-    max_waves: int = 64
     max_depth: int = 2  # 0=list only, 1=+post text, 2=+paginated comments
     # fetch join strategy: broadcast the politeness-bounded batch (html never
     # shuffles) vs sort-merge (for unbounded batches, where the driver-side
     # broadcast build would serialize)
     broadcast_fetch: bool = True
-    # bounded batches (probes, list waves, comment waves) ALWAYS broadcast,
-    # regardless of broadcast_fetch — broadcast_fetch then only selects the
-    # strategy for the one unbounded batch per round (the depth-1 text fetch).
+    # bounded batches (probes, list waves, comment waves) broadcast
+    # regardless of broadcast_fetch, waves up to BROADCAST_MAX_ROWS —
+    # broadcast_fetch then only selects the strategy for the one unbounded
+    # batch per round (the depth-1 text fetch).
     # Why (round-6 list-phase profile, BENCH/profile_list_phase.py): Spark
     # never reuses an exchange across queries, so on the shuffle-join path
     # EVERY wave re-shuffles and re-sorts the full pages html (2.5 GB written
@@ -77,56 +115,43 @@ class CrawlConfig:
     # and keeps html out of every exchange — the 100 TB-path economics.
     # False restores the round-5 behavior (everything follows broadcast_fetch).
     bounded_fetch_broadcast: bool = True
-    # SIZE-AWARE broadcast cap (r6 verdict item 1, adjudicated by the r7
-    # 4x-corpus ABAB — BENCH/fetch_abab_r7.json): a politeness wave whose
-    # batch exceeds this many rows falls back to the shuffle join even when
-    # bounded_fetch_broadcast is on.  The broadcast build (driver collect +
-    # hash relation + ship) is SERIAL, so past ~0.5M rows it dominates and
-    # INVERTS with core count (r6b at the 4x corpus: the one 1.7M-row wave
-    # read 66 s at 4c but 103 s at 16c broadcast, vs 48 s SMJ) while small
-    # waves broadcast strictly faster (r6c 1x ABAB, 0.43M rows).  Neither
-    # constant strategy can be right at 100x; the row count of every wave
-    # batch is already known (the politeness count) so the choice is free.
-    # Env override EGS_BOUNDED_BC_MAX_ROWS lets A/B studies force either arm.
-    bounded_bc_max_rows: int = 500_000
     # depth-1 text strategy: "join" = fetch join then extract (html crosses
     # the exchange on the SMJ path); "scan_extract" = bloom-pruned scan with
     # the extraction fused INTO the scan stage — html never shuffles, only
     # the small text rows do (the unbounded-batch 100 TB path; see
-    # engine/fetch.scan_extract); "auto" (default) picks per the MEASURED
-    # mean html size of previous rounds (manifest meta "mean_text_bytes"):
-    # the fat-html study (BENCH/fat_html_modes.json) showed scan_extract
-    # 2.75x faster at 56 KB pages while join wins at 3 KB — auto crosses
-    # over at scan_extract_bytes_threshold, and cold-starts as "join"
-    # until the store has a measurement
+    # engine/fetch.scan_extract); "auto" (default) picks per the measured
+    # mean html size (SCAN_EXTRACT_BYTES_THRESHOLD) and cold-starts as
+    # "join" until the store has a measurement
     text_fetch_mode: str = "auto"
-    scan_extract_bytes_threshold: int = 16384
     # F2 resume cursor (core/scheduler.py:206-217): only seeds >= start_code
     # (asc) / <= start_code (desc) are crawled this round
     start_code: str | None = None
     crawl_order: str = "asc"  # seed sort direction (core/scheduler.py:202-204)
-    # X9 start year: the reference seeds inference with datetime.now().year
-    # (archive/main_class.py:765); fixed here for reproducibility
-    inference_start_year: int = 2026
     # politeness-table budget derivation: pages per host per round =
     # round_seconds / delay_s; text fetches = max_qps × round_seconds
     # (P1 core/scheduler.py:245; P2 archive/full_text_CrawlerAsync.py:152)
     round_seconds: float = 3600.0
-    # text-merge join strategy crossover: past this many fetched texts the
-    # commit-time posts ⋈ texts join is hinted shuffled-hash (both sides are
-    # same-key round deltas — sort order buys nothing and SMJ sorts the text
-    # payload rows; measured 7.3 → 6.2 s on a 1.44M-row delta); below it the
-    # hint is withheld so Catalyst broadcasts the tiny text side
-    shj_text_merge_threshold: int = 100_000
-    # ... and ABOVE this estimated per-partition build size the hint is
-    # withheld again: a shuffled-hash build that does not fit execution
-    # memory is a hard SparkOutOfMemoryError, not a spill (guide §3.1) —
-    # measured at the r7 8x corpus (11.5M texts / 32 shuffle partitions ≈
-    # 700 MB per build) where the round died in the commit; SMJ spills
-    # gracefully there.  Estimate = n_texts / shuffle_partitions ×
-    # mean_text_bytes (the measured mean html size — conservative, html ≥
-    # extracted text).
-    shj_build_budget_bytes: int = 256 * 1024 * 1024
+
+
+def shj_text_merge_hint(
+    n_texts: int,
+    mean_text_bytes: float | None,
+    shuffle_partitions: int,
+    advisory_bytes: int | None = None,
+) -> bool:
+    """Whether the commit-time posts ⋈ texts merge gets the shuffle_hash hint.
+
+    The build side is the text delta, so its per-partition size is estimated
+    from the round's mean EXTRACTED-text bytes.  AQE coalescing can merge
+    shuffle partitions up to ``advisory_bytes`` (pass it when coalescing is
+    on), so the estimate never drops below it.  An unmeasured mean withholds
+    the hint: guessing low is the OOM case the budget exists to avoid."""
+    if mean_text_bytes is None or n_texts <= SHJ_TEXT_MERGE_THRESHOLD:
+        return False
+    est = n_texts / max(shuffle_partitions, 1) * mean_text_bytes
+    if advisory_bytes is not None:
+        est = max(est, advisory_bytes)
+    return est <= SHJ_BUILD_BUDGET_BYTES
 
 
 def _seed_ranks(
@@ -173,24 +198,21 @@ def _with_url_identity(df: DataFrame, n_salts: int) -> DataFrame:
     )
 
 
-def _materialize_concurrent(frames: list) -> None:
-    """Materialize several independent lazily-checkpointed frames as
-    concurrent driver-thread jobs (optimization guide §2.6: actions are only
-    sequential because the driver calls them sequentially) — the wall is
-    max(job), not sum(job).  Callers must have warmed any shared upstream
-    cache first so the concurrent jobs do not race to compute it."""
-    if len(frames) <= 1:
-        for df in frames:
-            df.count()
-        return
+def _run_concurrent(spark: SparkSession, fns: list) -> list:
+    """Run independent driver-side callables as concurrent driver threads
+    (optimization guide §2.6: actions are only sequential because the driver
+    calls them sequentially) — the wall is max(job), not sum(job).  Each
+    thread inherits the caller's local properties (job group, tags).  Callers
+    must have warmed any shared upstream cache first so the concurrent jobs
+    do not race to compute it."""
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark import inheritable_thread_target
 
-    with ThreadPoolExecutor(max_workers=len(frames)) as pool:
-        futs = [pool.submit(inheritable_thread_target(df.count)) for df in frames]
-        for f in futs:
-            f.result()
+    inherit = inheritable_thread_target(spark)
+    with ThreadPoolExecutor(max_workers=len(fns)) as pool:
+        futs = [pool.submit(inherit(fn)) for fn in fns]
+        return [f.result() for f in futs]
 
 
 def run_crawl(
@@ -253,32 +275,30 @@ def run_crawl(
     bloom_prev = None
     cuckoo_prev = None
     bloom_geom = dict(
-        zip(("m", "k"), SE._bloom_params(SE.BLOOM_KEYS_PER_SHARD, cfg.bloom_fpp))
+        zip(("m", "k"), SE._bloom_params(SE.BLOOM_KEYS_PER_SHARD, BLOOM_FPP))
     ) | {"n_shards": cfg.n_shards}
     from ..operators import cuckoo as CK
 
     cuckoo_geom = {"n_shards": cfg.n_shards, "slots": CK.SLOTS}
+
+    def _index_fresh(name: str, geom: dict) -> bool:
+        """A persisted index is usable only if its recorded geometry matches
+        this round's and it covers the latest committed round."""
+        m = store_meta.get(name)
+        return (
+            m is not None
+            and all(m.get(f) == v for f, v in geom.items())
+            and m.get("round") == store.current_round()
+        )
+
+    # the cuckoo flavor persists incrementally exactly like seen_bloom:
+    # blobs in the store, geometry + covered round in the manifest;
+    # drift/lag ⇒ rebuild from seen_prev (same contract)
     if cfg.use_bloom and cfg.seen_filter == "cuckoo":
-        # the cuckoo flavor persists incrementally exactly like seen_bloom:
-        # blobs in the store, geometry + covered round in the manifest;
-        # drift/lag ⇒ rebuild from seen_prev (same contract as below)
-        cm = store_meta.get("seen_cuckoo")
-        fresh = (
-            cm is not None
-            and all(cm.get(f) == cuckoo_geom[f] for f in ("n_shards", "slots"))
-            and cm.get("round") == store.current_round()
-        )
-        if fresh:
+        if _index_fresh("seen_cuckoo", cuckoo_geom):
             cuckoo_prev = store.load(spark, "seen_cuckoo")
-    elif cfg.use_bloom:
-        bm = store_meta.get("seen_bloom")
-        fresh = (
-            bm is not None
-            and all(bm.get(f) == bloom_geom[f] for f in ("n_shards", "m", "k"))
-            and bm.get("round") == store.current_round()
-        )
-        if fresh:
-            bloom_prev = store.load(spark, "seen_bloom")
+    elif cfg.use_bloom and _index_fresh("seen_bloom", bloom_geom):
+        bloom_prev = store.load(spark, "seen_bloom")
 
     if fetcher is None:
         from .fetch import FixtureFetcher
@@ -287,9 +307,6 @@ def run_crawl(
     # per-call override for politeness-bounded batches (None ⇒ follow the
     # fetcher's instance default); see CrawlConfig.bounded_fetch_broadcast
     bounded_bc = True if cfg.bounded_fetch_broadcast else None
-    bc_max_rows = int(
-        os.environ.get("EGS_BOUNDED_BC_MAX_ROWS", cfg.bounded_bc_max_rows)
-    )
 
     def _fetch(batch: DataFrame, bc: bool | None) -> DataFrame:
         """Fetch with the per-call broadcast override only when one is set —
@@ -300,21 +317,48 @@ def run_crawl(
             return fetcher.fetch(batch)
         return fetcher.fetch(batch, broadcast=bc)
 
+    def _fetch_stage(batch: DataFrame, bc: bool | None) -> DataFrame:
+        """The one fetch shape of list, text and comment batches: spread over
+        (host, salt), fetch, tag each row with its executing partition for
+        crawl_log.  Callers apply their own parse/extract UDF."""
+        return _fetch(
+            batch.repartition(cfg.fetch_partitions, F.col("host"), F.col("salt")),
+            bc,
+        ).withColumn("partition_id", F.spark_partition_id())
+
+    def _bounded_bc(n_rows: int) -> bool | None:
+        """Size-aware pick for a politeness-bounded batch (BROADCAST_MAX_ROWS):
+        its row count is already in hand, so an over-cap batch falls back to
+        the shuffle join instead of a serial driver-side broadcast build."""
+        return None if bounded_bc is None else n_rows <= BROADCAST_MAX_ROWS
+
+    def _fetch_log(
+        fetched: DataFrame, stage: str, new_urls, nbytes
+    ) -> DataFrame:
+        """crawl_log rows of one fetch: per (partition, host) counts.  Lazy —
+        each caller picks its own checkpoint."""
+        return (
+            fetched.groupBy("partition_id", "host")
+            .agg(
+                F.count("*").alias("fetched"),
+                F.sum(new_urls).alias("new_urls"),
+                F.sum(nbytes).alias("bytes"),
+            )
+            .withColumn("stage", F.lit(stage))
+            .withColumn("round", F.lit(round_id))
+        )
+
     # per-host politeness budgets derived from the config table (P1/P2/P5)
-    list_budgets = text_budgets = None
-    if politeness is not None:
-        list_budgets = politeness.select(
+    def _budgets(per_host) -> DataFrame | None:
+        if politeness is None:
+            return None
+        return politeness.select(
             "host",
-            F.greatest(
-                F.floor(F.lit(cfg.round_seconds) / F.col("delay_s")), F.lit(1)
-            ).cast("long").alias("budget"),
+            F.greatest(F.floor(per_host), F.lit(1)).cast("long").alias("budget"),
         )
-        text_budgets = politeness.select(
-            "host",
-            F.greatest(
-                F.floor(F.col("max_qps") * F.lit(cfg.round_seconds)), F.lit(1)
-            ).cast("long").alias("budget"),
-        )
+
+    list_budgets = _budgets(F.lit(cfg.round_seconds) / F.col("delay_s"))
+    text_budgets = _budgets(F.col("max_qps") * F.lit(cfg.round_seconds))
 
     # ---- probe stage -------------------------------------------------------
     ranks = _seed_ranks(seeds, cfg.start_code, cfg.crawl_order)
@@ -389,19 +433,13 @@ def run_crawl(
 
     pbloom = None
     if cfg.use_bloom:
-        pbm = store_meta.get("posts_bloom")
-        pbloom_fresh = (
-            pbm is not None
-            and all(pbm.get(f) == bloom_geom[f] for f in ("n_shards", "m", "k"))
-            and pbm.get("round") == store.current_round()
-        )
-        if pbloom_fresh:
+        if _index_fresh("posts_bloom", bloom_geom):
             pbloom = store.load(spark, "posts_bloom")
         elif posts_keys_prev is not None:
             # bootstrap: one O(corpus) distributed build this round, lazily
             # checkpointed so the commit-time merge reuses it un-recomputed
             pbloom = SE.build_bloom_shards(
-                _pkey_hash(posts_keys_prev), cfg.n_shards, fpp=cfg.bloom_fpp
+                _pkey_hash(posts_keys_prev), cfg.n_shards, fpp=BLOOM_FPP
             ).localCheckpoint(eager=False)
 
     # ---- wave loop over list pages ------------------------------------------
@@ -421,7 +459,7 @@ def run_crawl(
     list_fetched_rows = 0
     lineage_frames = []
 
-    while waves < cfg.max_waves:
+    while waves < MAX_WAVES:
         waves += 1
         if horizons is not None:
             pending = FR.prune_beyond_horizon(pending, horizons)
@@ -438,34 +476,19 @@ def run_crawl(
         # terminating wave's schedule/count costs nothing
         pending = over_budget.localCheckpoint(eager=False)
 
-        # size-aware strategy pick (CrawlConfig.bounded_bc_max_rows): the
-        # wave batch count is already in hand, so an over-cap wave falls
-        # back to the shuffle join instead of a serial driver-side
-        # broadcast build
-        wave_bc = False if (bounded_bc and n_batch > bc_max_rows) else bounded_bc
         fetched = (
-            _fetch(
-                batch.repartition(cfg.fetch_partitions, F.col("host"), F.col("salt")),
-                wave_bc,
-            )
-            .withColumn("partition_id", F.spark_partition_id())
+            _fetch_stage(batch, _bounded_bc(n_batch))
             .withColumn("p", parse_list_page_udf(F.col("html"), F.col("expected_count")))
             .cache()
         )
         list_fetched_rows += n_batch
         # lazy here; materialized concurrently with the wave-outcome frame
         # below once the fetched/page_rows caches are warm (guide §2.6)
-        wave_lineage = (
-            fetched.groupBy("partition_id", "host")
-            .agg(
-                F.count("*").alias("fetched"),
-                F.sum(F.size(F.coalesce(F.col("p.items"), F.array()))).alias("new_urls"),
-                F.sum(F.length(F.col("html")).cast("long")).alias("bytes"),
-            )
-            .withColumn("stage", F.lit("list_fetch"))
-            .withColumn("round", F.lit(round_id))
-            .localCheckpoint(eager=False)  # tiny; avoids refetch at commit
-        )
+        wave_lineage = _fetch_log(
+            fetched, "list_fetch",
+            F.size(F.coalesce(F.col("p.items"), F.array())),
+            F.length(F.col("html")).cast("long"),
+        ).localCheckpoint(eager=False)  # tiny; avoids refetch at commit
         lineage_frames.append(wave_lineage)
 
         page_rows = fetched.select(
@@ -576,7 +599,7 @@ def run_crawl(
         # materialize the two independent lazy checkpoints concurrently —
         # the firsts_wave job above already warmed the fetched/page_rows
         # caches, so these are two small jobs racing nothing
-        _materialize_concurrent([wave_lineage, wave_pages])
+        _run_concurrent(spark, [wave_lineage.count, wave_pages.count])
         list_seen_pages = list_seen_pages.unionByName(
             wave_pages.filter(F.col("ok")).select(
                 "stock_code", "content_type", "page", "url"
@@ -591,7 +614,7 @@ def run_crawl(
             else page_stats_acc.unionByName(stats)
         )
         horizons = FR.duplicate_page_horizon(
-            page_stats_acc, cfg.duplicate_page_threshold
+            page_stats_acc, DUPLICATE_PAGE_THRESHOLD
         ).transform(_cached)
         batch.unpersist()
         fetched.unpersist()
@@ -674,14 +697,79 @@ def run_crawl(
         mb = store_meta.get("mean_text_bytes")
         text_mode = (
             "scan_extract"
-            if mb is not None and mb > cfg.scan_extract_bytes_threshold
+            if mb is not None and mb > SCAN_EXTRACT_BYTES_THRESHOLD
             else "join"
         )
-    mean_text_bytes = None
-    cand_cols = ["url", "host_rank", "type_rank", "page", "item_seq", "attempts"]
-    d1_cand = None
-    if n_posts_new > 0:
-        d1_cand = (
+    # frontier columns a depth-1 / depth-2 row carries besides attempts
+    d1_keys = [
+        "url", "url_hash", "host", "salt",
+        "host_rank", "type_rank", "page", "item_seq",
+    ]
+    d2_keys = [
+        "url", "url_hash", "host", "salt", "stock_code", "content_type",
+        "post_url_id", "page", "host_rank", "type_rank", "item_seq",
+    ]
+
+    def _candidates(depth: int, keys: list, new_rows) -> DataFrame | None:
+        """This round's new rows (``new_rows()``; none without new posts) ∪
+        previous rounds' retry/pending rows of the same depth still within
+        the retry budget.  A candidate row is a frontier row minus the
+        _with_url_identity columns."""
+        cols = [c for c in keys if c not in ("url_hash", "host", "salt")]
+        cols.append("attempts")
+        parts = [new_rows().select(*cols)] if n_posts_new > 0 else []
+        if frontier_prev is not None:
+            parts.append(frontier_prev.filter(
+                (F.col("depth") == depth)
+                & F.col("status").isin("retry", "pending")
+                & (F.col("attempts") < cfg.max_attempts)
+            ).select(*cols))
+        return reduce(DataFrame.unionByName, parts) if parts else None
+
+    def _gated(cand: DataFrame) -> DataFrame:
+        """URL identity + robots gate of a depth-1/depth-2 candidate set."""
+        cand = _with_url_identity(cand, cfg.n_salts)
+        return FR.robots_gate(cand, robots) if robots is not None else cand
+
+    def _text_schedule(cand: DataFrame) -> tuple:
+        """P2 politeness split of a gated candidate set.  Salted two-phase
+        rank: the depth-1 frontier is the whole round's post list, ~all on
+        one host — the plain window would single-task it.  The cached
+        schedule feeds the fetch/scan (and, in scan_extract mode, the
+        sizing count + distributed blob build)."""
+        sched, unsched = FR.politeness_split(
+            cand.transform(_cached),
+            cfg.text_budget_per_host or cfg.budget_per_host,
+            host_budgets=text_budgets, n_salts=cfg.n_salts,
+        )
+        return sched.transform(_cached), unsched
+
+    def _retry_rows(
+        fetched: DataFrame, ok, unscheduled: DataFrame, keys: list
+    ) -> DataFrame:
+        """Frontier rows of one depth: failures get attempts+1 (retry→failed
+        at budget), over-politeness-budget rows stay pending."""
+        fails = fetched.filter(~ok).select(
+            *keys, (F.col("attempts") + 1).alias("attempts")
+        ).withColumn(
+            "status",
+            F.when(F.col("attempts") >= cfg.max_attempts, F.lit("failed"))
+            .otherwise(F.lit("retry")),
+        )
+        pend = unscheduled.select(*keys, "attempts").withColumn(
+            "status", F.lit("pending")
+        )
+        return fails.unionByName(pend)
+
+    def _run_depth1() -> dict:
+        """Depth-1 text pipeline (gates → politeness → fetch → extract).
+        Runs as its own driver thread so its Spark jobs overlap the
+        independent depth-2 comment pipeline (optimization guide §2.6 —
+        actions are only sequential because the driver calls them
+        sequentially); all outputs, its elapsed time included, return via
+        the dict — the only shared write is ``_cached``'s list append."""
+        t_d1 = time.time()
+        d1_cand = _candidates(1, d1_keys, lambda: (
             posts_new.groupBy("url")
             .agg(
                 F.min("host_rank").alias("host_rank"),
@@ -690,37 +778,11 @@ def run_crawl(
                 F.min("item_seq").alias("item_seq"),
             )
             .withColumn("attempts", F.lit(0))
-            .select(*cand_cols)
-        )
-    if frontier_prev is not None:
-        carry = frontier_prev.filter(
-            (F.col("depth") == 1)
-            & F.col("status").isin("retry", "pending")
-            & (F.col("attempts") < cfg.max_attempts)
-        ).select(*cand_cols)
-        d1_cand = carry if d1_cand is None else d1_cand.unionByName(carry)
-
-    n_text_fetched = 0
-    post_seen_urls = spark.createDataFrame([], "url string")
-    text_ok = None
-    d1_frontier_rows = None
-    bootstrap_blooms = None  # full-corpus build done at the d1 gate, if any
-    bootstrap_cuckoo = None
-
-    def _run_depth1() -> dict | None:
-        """Depth-1 text pipeline (gates → politeness → fetch → extract).
-        Runs as its own driver thread so its Spark jobs overlap the
-        independent depth-2 comment pipeline (optimization guide §2.6 —
-        actions are only sequential because the driver calls them
-        sequentially); all outputs return via the dict, nothing global is
-        mutated from the thread."""
+        ))
         if d1_cand is None:
-            return None
-        t_d1 = time.time()
-        out: dict = {"bootstrap_blooms": None, "bootstrap_cuckoo": None}
-        cand = _with_url_identity(d1_cand, cfg.n_salts)
-        if cfg.apply_robots and robots is not None:
-            cand = FR.robots_gate(cand, robots)
+            return {}
+        out: dict = {}
+        cand = _gated(d1_cand)
         # seen gate: bloom front-filter + exact anti-join (previously
         # extracted URLs never refetched)
         if seen_prev is not None:
@@ -748,25 +810,14 @@ def run_crawl(
                     shards = bloom_prev
                 else:
                     shards = out["bootstrap_blooms"] = SE.build_bloom_shards(
-                        seen_prev, cfg.n_shards, fpp=cfg.bloom_fpp
+                        seen_prev, cfg.n_shards, fpp=BLOOM_FPP
                     ).localCheckpoint(eager=False)
                 cand = SE.filter_unseen_with_bloom(
                     cand, seen_prev, shards, cfg.n_shards
                 )
             else:
                 cand = SE.filter_unseen(cand, seen_prev)
-        cand = cand.transform(_cached)
-
-        text_budget = cfg.text_budget_per_host or cfg.budget_per_host
-        # cache: the schedule feeds the fetch/scan,
-        # and (scan_extract mode) the sizing count + distributed blob build
-        # salted two-phase rank: the depth-1 frontier is the whole round's
-        # post list, ~all on one host — the plain window would single-task it
-        scheduled, unscheduled = FR.politeness_split(
-            cand, text_budget, host_budgets=text_budgets,
-            n_salts=cfg.n_salts,
-        )
-        scheduled = scheduled.transform(_cached)
+        scheduled, unscheduled = _text_schedule(cand)
         if text_mode == "scan_extract":
             from .fetch import scan_extract
 
@@ -784,13 +835,7 @@ def run_crawl(
             ).transform(_cached)
         else:
             fetched_posts = (
-                _fetch(
-                    scheduled.repartition(
-                        cfg.fetch_partitions, F.col("host"), F.col("salt")
-                    ),
-                    None,
-                )
-                .withColumn("partition_id", F.spark_partition_id())
+                _fetch_stage(scheduled, None)
                 .withColumn("e", extract_text_udf(F.col("url"), F.col("html")))
                 .select(
                     "url", "url_hash", "host", "salt", "partition_id", "attempts",
@@ -802,27 +847,22 @@ def run_crawl(
                 )
                 .transform(_cached)
             )
-        out["lineage"] = (
-            fetched_posts.groupBy("partition_id", "host")
-            .agg(
-                F.count("*").alias("fetched"),
-                F.sum((F.col("extract_status").isin("ok", "fund")).cast("long")).alias(
-                    "new_urls"
-                ),
-                F.sum("bytes").alias("bytes"),
-            )
-            .withColumn("stage", F.lit("text_fetch"))
-            .withColumn("round", F.lit(round_id))
+        ok = F.col("extract_status").isin("ok", "fund")
+        out["lineage"] = _fetch_log(
+            fetched_posts, "text_fetch", ok.cast("long"), F.col("bytes")
         )
-        text_ok = fetched_posts.filter(
-            F.col("extract_status").isin("ok", "fund")
-        ).select("url", "full_text", "full_text_time")
+        text_ok = fetched_posts.filter(ok).select(
+            "url", "full_text", "full_text_time"
+        )
         out["text_ok"] = text_ok
-        # ONE aggregate job yields both the fetch count and the mean html
-        # size that drives next round's auto mode selection (was two
-        # sequential actions on the cached frame)
+        # ONE aggregate job yields the fetch count, the mean html size that
+        # drives next round's auto mode selection, and the mean extracted-
+        # text size that sizes this round's text-merge build (avg skips the
+        # null text of failed fetches)
         stat = fetched_posts.agg(
-            F.count("*").alias("n"), F.avg("bytes").alias("mb")
+            F.count("*").alias("n"),
+            F.avg("bytes").alias("mb"),
+            F.avg(F.octet_length("full_text")).alias("mt"),
         ).head(1)[0]
         out["n_text_fetched"] = int(stat["n"])
         out["mean_text_bytes"] = (
@@ -830,30 +870,12 @@ def run_crawl(
             if out["n_text_fetched"] > 0 and stat["mb"] is not None
             else None
         )
-        phase_t['text_fetch_extract'] = round(
-            time.time() - t_d1, 3
-        ) + phase_t.get('text_fetch_extract', 0.0)
-        out["post_seen_urls"] = text_ok.select("url")
-
-        # frontier rows: failures get attempts+1 (retry→failed at budget),
-        # over-politeness-budget rows stay pending
-        fails = fetched_posts.filter(
-            ~F.col("extract_status").isin("ok", "fund")
-        ).select(
-            "url", "url_hash", "host", "salt",
-            "host_rank", "type_rank", "page", "item_seq",
-            (F.col("attempts") + 1).alias("attempts"),
-        ).withColumn(
-            "status",
-            F.when(F.col("attempts") >= cfg.max_attempts, F.lit("failed")).otherwise(
-                F.lit("retry")
-            ),
+        out["mean_extracted_bytes"] = stat["mt"]
+        out["elapsed_s"] = round(time.time() - t_d1, 3)
+        out["seen_urls"] = text_ok.select("url")
+        out["frontier_rows"] = _retry_rows(
+            fetched_posts, ok, unscheduled, d1_keys
         )
-        pend = unscheduled.select(
-            "url", "url_hash", "host", "salt",
-            "host_rank", "type_rank", "page", "item_seq", "attempts",
-        ).withColumn("status", F.lit("pending"))
-        out["d1_frontier_rows"] = fails.unionByName(pend)
         return out
 
     # ---- depth-2: paginated comments (engine-defined contract) ---------------
@@ -862,83 +884,51 @@ def run_crawl(
     # generalizes X3, reply times are year-less → X9 inference in-pipeline.
     from ..schema import COMMENTS
 
-    def _run_depth2() -> dict | None:
+    def _run_depth2() -> dict:
         """Depth-2 comment pipeline — the concurrent twin of _run_depth1
         (same thread/isolation contract: outputs via the dict only)."""
         if cfg.max_depth < 2:
-            return None
+            return {}
         t_d2 = time.time()
         out: dict = {"comments_prev": store.load(spark, "comments")}
         comments_prev = out["comments_prev"]
-        c_cols = [
-            "url", "stock_code", "content_type", "post_url_id", "page",
-            "host_rank", "type_rank", "item_seq", "attempts",
-        ]
-        d2_cand = None
-        if n_posts_new > 0:
-            d2_cand = (
-                posts_new.filter(F.col("comment_count") > 0)
-                .select(
-                    "stock_code", "content_type",
-                    F.col("url_id").alias("post_url_id"),
-                    "comment_count", "host_rank", "type_rank", "item_seq",
-                )
-                .withColumn("n_cpages", U.comment_total_pages(F.col("comment_count")))
-                .withColumn("page", F.explode(F.sequence(F.lit(1), F.col("n_cpages"))))
-                .withColumn(
-                    "url",
-                    U.comment_page_url(
-                        F.col("stock_code"), F.col("post_url_id"), F.col("page")
-                    ),
-                )
-                .withColumn("attempts", F.lit(0))
-                .select(*c_cols)
+        d2_cand = _candidates(2, d2_keys, lambda: (
+            posts_new.filter(F.col("comment_count") > 0)
+            .select(
+                "stock_code", "content_type",
+                F.col("url_id").alias("post_url_id"),
+                "comment_count", "host_rank", "type_rank", "item_seq",
             )
-        if frontier_prev is not None:
-            carry2 = frontier_prev.filter(
-                (F.col("depth") == 2)
-                & F.col("status").isin("retry", "pending")
-                & (F.col("attempts") < cfg.max_attempts)
-            ).select(*c_cols)
-            d2_cand = carry2 if d2_cand is None else d2_cand.unionByName(carry2)
-
+            .withColumn("n_cpages", U.comment_total_pages(F.col("comment_count")))
+            .withColumn("page", F.explode(F.sequence(F.lit(1), F.col("n_cpages"))))
+            .withColumn(
+                "url",
+                U.comment_page_url(
+                    F.col("stock_code"), F.col("post_url_id"), F.col("page")
+                ),
+            )
+            .withColumn("attempts", F.lit(0))
+        ))
         if d2_cand is None:
             return out
-        d2_cand = _with_url_identity(d2_cand, cfg.n_salts)
-        if cfg.apply_robots and robots is not None:
-            d2_cand = FR.robots_gate(d2_cand, robots)
+        d2_cand = _gated(d2_cand)
         if seen_prev is not None:
             d2_cand = SE.filter_unseen(d2_cand, seen_prev)
-        d2_cand = d2_cand.transform(_cached)
-        text_budget = cfg.text_budget_per_host or cfg.budget_per_host
-        c_sched, c_unsched = FR.politeness_split(
-            d2_cand, text_budget, host_budgets=text_budgets,
-            n_salts=cfg.n_salts,
-        )
-        c_sched = c_sched.transform(_cached)
+        c_sched, c_unsched = _text_schedule(d2_cand)
+
+        from ..functions.extract import parse_reply_page_udf
+
         # same size-aware pick as the list waves, gated on the comment-page
         # total already computed in the posts-project aggregate (no extra
         # driver job).  The estimate covers this round's NEW comment pages;
         # frontier carry rows (bounded by the retry budget) can push a
         # borderline batch slightly over the cap, which only costs a
         # somewhat-large broadcast — never correctness.
-        c_bc = bounded_bc
-        if bounded_bc and n_comment_pages_est > bc_max_rows:
-            c_bc = False
-
-        from ..functions.extract import parse_reply_page_udf
-
         fetched_c = (
-            _fetch(
-                c_sched.repartition(
-                    cfg.fetch_partitions, F.col("host"), F.col("salt")
-                ),
-                c_bc,
-            )
-            .withColumn("partition_id", F.spark_partition_id())
+            _fetch_stage(c_sched, _bounded_bc(n_comment_pages_est))
             .withColumn("p", parse_reply_page_udf(F.col("html")))
             .select(
-                *c_cols, "url_hash", "host", "salt", "partition_id",
+                *d2_keys, "attempts", "partition_id",
                 F.length(F.col("html")).cast("long").alias("bytes"),
                 F.col("p.items").alias("items"),
                 (F.col("html").isNotNull() & (F.col("p.status") == "ok")).alias("ok"),
@@ -946,21 +936,12 @@ def run_crawl(
             .transform(_cached)
         )
         out["n_comment_fetched"] = fetched_c.count()
-        phase_t['comment_fetch'] = round(
-            time.time() - t_d2, 3
-        ) + phase_t.get('comment_fetch', 0.0)
-        out["lineage"] = (
-            fetched_c.groupBy("partition_id", "host")
-            .agg(
-                F.count("*").alias("fetched"),
-                F.sum(F.size(F.coalesce(F.col("items"), F.array()))).alias("new_urls"),
-                F.sum("bytes").alias("bytes"),
-            )
-            .withColumn("stage", F.lit("comment_fetch"))
-            .withColumn("round", F.lit(round_id))
-            .localCheckpoint(eager=True)
-        )
-        out["comment_seen_urls"] = fetched_c.filter(F.col("ok")).select("url")
+        out["elapsed_s"] = round(time.time() - t_d2, 3)
+        out["lineage"] = _fetch_log(
+            fetched_c, "comment_fetch",
+            F.size(F.coalesce(F.col("items"), F.array())), F.col("bytes"),
+        ).localCheckpoint(eager=True)
+        out["seen_urls"] = fetched_c.filter(F.col("ok")).select("url")
 
         replies_new = (
             fetched_c.filter(F.col("ok"))
@@ -1015,7 +996,7 @@ def run_crawl(
             raw_col="reply_time_raw",
             partition_cols=["stock_code", "content_type", "post_url_id"],
             order_cols=["page", "item_seq"],
-            start_year=cfg.inference_start_year,
+            start_year=INFERENCE_START_YEAR,
             out_col="reply_time",
         )
         new_comments = (
@@ -1037,73 +1018,31 @@ def run_crawl(
             )
         out["new_comments"] = new_comments
 
-        c_fails = fetched_c.filter(~F.col("ok")).select(
-            "url", "url_hash", "host", "salt", "stock_code", "content_type",
-            "post_url_id", "page", "host_rank", "type_rank", "item_seq",
-            (F.col("attempts") + 1).alias("attempts"),
-        ).withColumn(
-            "status",
-            F.when(F.col("attempts") >= cfg.max_attempts, F.lit("failed"))
-            .otherwise(F.lit("retry")),
+        out["frontier_rows"] = _retry_rows(
+            fetched_c, F.col("ok"), c_unsched, d2_keys
         )
-        c_pend = c_unsched.select(
-            "url", "url_hash", "host", "salt", "stock_code", "content_type",
-            "post_url_id", "page", "host_rank", "type_rank", "item_seq",
-            "attempts",
-        ).withColumn("status", F.lit("pending"))
-        out["d2_frontier_rows"] = c_fails.unionByName(c_pend)
         return out
 
     # depth-1 and depth-2 are INDEPENDENT pipelines (both derive only from
-    # posts_new + the previous frontier/seen state); when both are active
-    # they run as two concurrent driver threads so one pipeline's straggler
-    # tail back-fills the other's idle cores (guide §2.6 — Spark happily
-    # runs several jobs at once; actions are only sequential because the
-    # driver calls them sequentially).  Their phase walls are per-pipeline
-    # elapsed times, so 'text_fetch_extract' + 'comment_fetch' can sum to
-    # more than the round wall when overlapped.
-    overlap = (
-        d1_cand is not None
-        and cfg.max_depth >= 2
-        and os.environ.get("EGS_D1D2_OVERLAP", "1") == "1"
-    )
-    if overlap:
-        from concurrent.futures import ThreadPoolExecutor as _TPE
-
-        from pyspark import inheritable_thread_target
-
-        with _TPE(max_workers=2) as _pool:
-            _f1 = _pool.submit(inheritable_thread_target(_run_depth1))
-            _f2 = _pool.submit(inheritable_thread_target(_run_depth2))
-            d1_res = _f1.result()
-            d2_res = _f2.result()
-    else:
-        d1_res = _run_depth1()
-        d2_res = _run_depth2()
+    # posts_new + the previous frontier/seen state); they run as two
+    # concurrent driver threads so one pipeline's straggler tail back-fills
+    # the other's idle cores (guide §2.6 — Spark happily runs several jobs
+    # at once; actions are only sequential because the driver calls them
+    # sequentially).  Their phase walls are per-pipeline elapsed times, so
+    # 'text_fetch_extract' + 'comment_fetch' can sum to more than the round
+    # wall when overlapped.
+    d1, d2 = _run_concurrent(spark, [_run_depth1, _run_depth2])
     phase_t["_last"] = time.time()
-
-    if d1_res is not None:
-        n_text_fetched = d1_res["n_text_fetched"]
-        text_ok = d1_res["text_ok"]
-        post_seen_urls = d1_res["post_seen_urls"]
-        d1_frontier_rows = d1_res["d1_frontier_rows"]
-        bootstrap_blooms = d1_res["bootstrap_blooms"]
-        bootstrap_cuckoo = d1_res["bootstrap_cuckoo"]
-        mean_text_bytes = d1_res["mean_text_bytes"]
-        lineage_frames.append(d1_res["lineage"])
-    comments_prev = d2_res.get("comments_prev") if d2_res is not None else None
-    comment_seen_urls = spark.createDataFrame([], "url string")
-    d2_frontier_rows = None
-    n_comment_fetched = 0
-    new_comments_out = None
-    if d2_res is not None:
-        n_comment_fetched = d2_res.get("n_comment_fetched", 0)
-        if d2_res.get("comment_seen_urls") is not None:
-            comment_seen_urls = d2_res["comment_seen_urls"]
-        d2_frontier_rows = d2_res.get("d2_frontier_rows")
-        new_comments_out = d2_res.get("new_comments")
-        if d2_res.get("lineage") is not None:
-            lineage_frames.append(d2_res["lineage"])
+    for phase, res in (("text_fetch_extract", d1), ("comment_fetch", d2)):
+        if "elapsed_s" in res:
+            phase_t[phase] = res["elapsed_s"]
+        if "lineage" in res:
+            lineage_frames.append(res["lineage"])
+    text_ok = d1.get("text_ok")
+    n_text_fetched = d1.get("n_text_fetched", 0)
+    mean_text_bytes = d1.get("mean_text_bytes")
+    comments_prev = d2.get("comments_prev")
+    new_comments_out = d2.get("new_comments")
 
     # ---- assemble round deltas (append-only commit) ---------------------------
     # Each table commits ONLY this round's new rows; SnapshotStore accumulates
@@ -1135,26 +1074,24 @@ def run_crawl(
             # shuffled-hash over sort-merge for LARGE rounds: both sides are
             # round deltas of the same key set, so the merge gains nothing
             # from sort order and SMJ would sort the text payload rows on
-            # 70-byte url keys at every commit — measured 7.3 → 6.2 s on the
-            # 1.44M-row bigcorpus posts write (hint lands on the build side;
-            # a LEFT join builds right = the text side, per-partition
-            # footprint bounded by shuffle partitioning).  Small rounds skip
-            # the hint so Catalyst still broadcasts the tiny text side — a
-            # strategy hint would override that choice.  VERY large rounds
-            # skip it too (shj_build_budget_bytes): a hash build that does
-            # not fit execution memory is a hard OOM, not a spill — the r7
-            # 8x-corpus run died here at ~700 MB per-partition builds; SMJ
-            # sorts-and-spills safely in that regime (guide §3.1).
-            _shuf_parts = int(
-                spark.conf.get("spark.sql.shuffle.partitions", "200")
+            # 70-byte url keys at every commit (hint lands on the build
+            # side; a LEFT join builds right = the text side).  Small rounds
+            # skip the hint so Catalyst still broadcasts the tiny text side
+            # — a strategy hint would override that choice.  VERY large
+            # rounds skip it too: a hash build that does not fit execution
+            # memory is a hard OOM, not a spill — SMJ sorts-and-spills
+            # safely there (guide §3.1).  See shj_text_merge_hint.
+            conf = spark.conf.get
+            coalescing = conf("spark.sql.adaptive.enabled") == "true" and (
+                conf("spark.sql.adaptive.coalescePartitions.enabled") == "true"
             )
-            _build_est = (
-                n_text_fetched / max(_shuf_parts, 1)
-                * float(mean_text_bytes or 2048)
-            )
-            if (
-                n_text_fetched > cfg.shj_text_merge_threshold
-                and _build_est <= cfg.shj_build_budget_bytes
+            advisory = spark.sparkContext._jvm.org.apache.spark.network.util \
+                .JavaUtils.byteStringAsBytes(
+                    conf("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
+            if shj_text_merge_hint(
+                n_text_fetched, d1.get("mean_extracted_bytes"),
+                int(conf("spark.sql.shuffle.partitions")),
+                advisory if coalescing else None,
             ):
                 upd = upd.hint("shuffle_hash")
             posts_out = (
@@ -1191,9 +1128,11 @@ def run_crawl(
 
     if horizons is not None:
         list_seen_pages = FR.prune_beyond_horizon(list_seen_pages, horizons)
+    no_urls = spark.createDataFrame([], "url string")
     seen_new = (
-        list_seen_pages.select("url").unionByName(post_seen_urls)
-        .unionByName(comment_seen_urls)
+        list_seen_pages.select("url")
+        .unionByName(d1.get("seen_urls", no_urls))
+        .unionByName(d2.get("seen_urls", no_urls))
         .distinct()
         .withColumn("url", U.canonicalize_url(F.col("url")))
         .withColumn("url_hash", U.url_hash(F.col("url")))
@@ -1211,15 +1150,14 @@ def run_crawl(
         if bloom_prev is not None:
             seen_new = SE.filter_unseen_with_bloom(
                 seen_new, seen_prev, bloom_prev, cfg.n_shards
-            ).select("url_hash", "url", "shard", "round")
+            )
         elif cuckoo_prev is not None:
             seen_new = CK.filter_unseen_with_cuckoo(
                 seen_new, seen_prev, cuckoo_prev, cfg.n_shards
-            ).select("url_hash", "url", "shard", "round")
+            )
         else:
-            seen_new = seen_new.join(
-                seen_prev.select("url"), on="url", how="left_anti"
-            ).select("url_hash", "url", "shard", "round")
+            seen_new = seen_new.join(seen_prev.select("url"), on="url", how="left_anti")
+        seen_new = seen_new.select("url_hash", "url", "shard", "round")
     if cfg.use_bloom:
         # seen_new feeds TWO commit jobs (the seen delta write and the bloom
         # delta-blob build); materialize once or the whole probe/anti-join
@@ -1228,10 +1166,7 @@ def run_crawl(
     appends["seen"] = seen_new
 
     if lineage_frames:
-        crawl_log = lineage_frames[0]
-        for fr in lineage_frames[1:]:
-            crawl_log = crawl_log.unionByName(fr)
-        crawl_log = crawl_log.withColumn(
+        crawl_log = reduce(DataFrame.unionByName, lineage_frames).withColumn(
             "wall_ms", F.lit(int((time.time() - t0) * 1000))
         ).select(
             "round", "stage", "partition_id", "host", "fetched", "new_urls",
@@ -1253,14 +1188,19 @@ def run_crawl(
         F.lit(round_id).alias("round"),
         F.col("expected_count").cast("long").alias("expected_count"),
     )
-    if d1_frontier_rows is not None:
-        d1_out = d1_frontier_rows.select(
+    for depth, rows in ((1, d1.get("frontier_rows")), (2, d2.get("frontier_rows"))):
+        if rows is None:
+            continue
+
+        def _opt(c: str):
+            # depth-1 rows carry no list/comment coordinates
+            return c if c in rows.columns else F.lit(None).cast("string").alias(c)
+
+        frontier_out = frontier_out.unionByName(rows.select(
             "url", "url_hash", "host", "salt",
-            F.lit(1).alias("depth"),
-            F.lit(None).cast("string").alias("stock_code"),
-            F.lit(None).cast("string").alias("content_type"),
+            F.lit(depth).alias("depth"), _opt("stock_code"), _opt("content_type"),
             F.col("page").cast("int").alias("page"),
-            F.lit(None).cast("string").alias("post_url_id"),
+            _opt("post_url_id"),
             F.col("host_rank").cast("long").alias("host_rank"),
             F.col("type_rank").cast("int").alias("type_rank"),
             F.col("item_seq").cast("int").alias("item_seq"),
@@ -1268,23 +1208,7 @@ def run_crawl(
             F.col("attempts").cast("int").alias("attempts"),
             F.lit(round_id).alias("round"),
             F.lit(None).cast("long").alias("expected_count"),
-        )
-        frontier_out = frontier_out.unionByName(d1_out)
-    if d2_frontier_rows is not None:
-        d2_out = d2_frontier_rows.select(
-            "url", "url_hash", "host", "salt",
-            F.lit(2).alias("depth"), "stock_code", "content_type",
-            F.col("page").cast("int").alias("page"),
-            "post_url_id",
-            F.col("host_rank").cast("long").alias("host_rank"),
-            F.col("type_rank").cast("int").alias("type_rank"),
-            F.col("item_seq").cast("int").alias("item_seq"),
-            "status",
-            F.col("attempts").cast("int").alias("attempts"),
-            F.lit(round_id).alias("round"),
-            F.lit(None).cast("long").alias("expected_count"),
-        )
-        frontier_out = frontier_out.unionByName(d2_out)
+        ))
     # Terminally-failed rows leave the per-round snapshot for an APPEND-ONLY
     # delta table (round-3 verdict What's-wrong #2): the frontier snapshot is
     # rewritten whole each commit, so carrying every all-time failure kept
@@ -1321,24 +1245,25 @@ def run_crawl(
         commit_meta["posts_rows"] = prev_count + n_posts_new
     elif "posts_rows" not in store_meta and posts_prev is None:
         commit_meta["posts_rows"] = 0
+
+    def _index_base(prev, bootstrap, build):
+        """The URL index this round's delta merges into: the stored blobs,
+        else the d1 gate's checkpointed bootstrap build when it ran (a second
+        full seen scan in the same round is pure waste), else a full build."""
+        if prev is not None or seen_prev is None:
+            return prev
+        return bootstrap if bootstrap is not None else build(seen_prev)
+
     if cfg.use_bloom and cfg.seen_filter == "cuckoo":
         # maintain the cuckoo index incrementally: the round's seen delta is
         # INSERTED into the stored per-shard tables (the delete-capable
         # structure's native delta-merge); a shard that outgrew its table
         # passes through flagged and is rebuilt resized from the full corpus
         # — only that shard, only when it actually fills.
-        if cuckoo_prev is not None:
-            base = cuckoo_prev
-        elif seen_prev is not None:
-            # reuse the d1 gate's checkpointed bootstrap build when it ran;
-            # a second full seen scan in the same round is pure waste
-            base = (
-                bootstrap_cuckoo
-                if bootstrap_cuckoo is not None
-                else CK.build_cuckoo_shards(seen_prev, cfg.n_shards, headroom=2.0)
-            )
-        else:
-            base = None
+        base = _index_base(
+            cuckoo_prev, d1.get("bootstrap_cuckoo"),
+            lambda df: CK.build_cuckoo_shards(df, cfg.n_shards, headroom=2.0),
+        )
         if base is None:
             blobs = CK.build_cuckoo_shards(seen_new, cfg.n_shards, headroom=2.0)
         else:
@@ -1363,24 +1288,14 @@ def run_crawl(
         # delta, OR-merged into the stored blob set (identical geometry).  At
         # sandbox sizing the snapshot is ~15 MB; a 10^4-shard deployment
         # would delta-commit only touched shards — same merge operator.
-        delta_blobs = SE.build_bloom_shards(
-            seen_new, cfg.n_shards, fpp=cfg.bloom_fpp
+        delta_blobs = SE.build_bloom_shards(seen_new, cfg.n_shards, fpp=BLOOM_FPP)
+        base = _index_base(
+            bloom_prev, d1.get("bootstrap_blooms"),
+            lambda df: SE.build_bloom_shards(df, cfg.n_shards, fpp=BLOOM_FPP),
         )
-        if bloom_prev is not None:
-            blobs = SE.merge_bloom_shards(bloom_prev, delta_blobs)
-        elif seen_prev is not None:
-            # reuse the d1 gate's checkpointed bootstrap build when it ran;
-            # a second full seen scan in the same round is pure waste
-            blobs = SE.merge_bloom_shards(
-                bootstrap_blooms
-                if bootstrap_blooms is not None
-                else SE.build_bloom_shards(
-                    seen_prev, cfg.n_shards, fpp=cfg.bloom_fpp
-                ),
-                delta_blobs,
-            )
-        else:
-            blobs = delta_blobs
+        blobs = (
+            delta_blobs if base is None else SE.merge_bloom_shards(base, delta_blobs)
+        )
         snapshots["seen_bloom"] = blobs
         commit_meta["seen_bloom"] = {**bloom_geom, "round": round_id}
 
@@ -1396,7 +1311,7 @@ def run_crawl(
         pk_delta = (
             SE.build_bloom_shards(
                 _pkey_hash(posts_new.select(*POSTS_KEY)),
-                cfg.n_shards, fpp=cfg.bloom_fpp,
+                cfg.n_shards, fpp=BLOOM_FPP,
             )
             if n_posts_new > 0
             else None
@@ -1426,7 +1341,8 @@ def run_crawl(
     phase_t.pop('_last', None)
     wall_s = time.time() - t0
     urls_fetched = (
-        list_fetched_rows + n_text_fetched + n_comment_fetched + probe_res.count()
+        list_fetched_rows + n_text_fetched + d2.get("n_comment_fetched", 0)
+        + probe_res.count()
     )
     return {
         "round": round_id,

@@ -398,8 +398,3 @@ class HttpFetcher:
             sched.repartition(self.n_partitions, *part_keys)
             .mapInPandas(_fetch, out_schema)
         )
-
-
-def with_fetch_lineage(fetched: DataFrame) -> DataFrame:
-    """Tag each fetched row with its executing partition for crawl_log."""
-    return fetched.withColumn("partition_id", F.spark_partition_id())

@@ -17,7 +17,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
 
 
 def cosine_expr(a, b):
@@ -65,19 +64,6 @@ def topk_brute(
 def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
     rng = np.random.default_rng(seed)
     return rng.standard_normal((n_planes, dim)).astype(np.float64)
-
-
-def lsh_signature_udf(planes: np.ndarray):
-    """pandas UDF: embedding -> packed sign-bit signature (long)."""
-
-    @F.pandas_udf(LongType())
-    def _sig(emb: pd.Series) -> pd.Series:
-        mat = np.stack(emb.to_numpy())  # (batch, dim)
-        bits = mat.astype(np.float64) @ planes.T > 0  # (batch, n_planes)
-        weights = (1 << np.arange(planes.shape[0], dtype=np.int64))
-        return pd.Series((bits @ weights).astype(np.int64))
-
-    return _sig
 
 
 def lsh_multisig_udf(all_planes: np.ndarray):

@@ -189,24 +189,12 @@ class SnapshotStore:
                 dels["paths"].append(rel)
 
         if jobs:
-            trace = os.environ.get("EGS_COMMIT_TIMINGS")
 
             def _write(job):
                 df, rel = job
-                t = time.time()
                 df.write.mode("overwrite").parquet(os.path.join(self.root, rel))
-                if trace:
-                    print(
-                        f"COMMIT_WRITE {rel} {time.time() - t:.3f}s "
-                        f"parts={df.rdd.getNumPartitions()}",
-                        flush=True,
-                    )
 
-            # EGS_COMMIT_WORKERS=1 serializes the writes — diagnostic knob:
-            # per-table walls under concurrency include slot-queueing time,
-            # so attributing commit cost to a table needs a sequential run
-            workers = int(os.environ.get("EGS_COMMIT_WORKERS", len(jobs)) or len(jobs))
-            with ThreadPoolExecutor(max_workers=workers) as pool:
+            with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
                 list(pool.map(_write, jobs))
 
         manifest = {

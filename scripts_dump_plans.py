@@ -136,7 +136,7 @@ def main() -> None:
         .drop("_new_text")
     )
     sections.append((
-        "Commit text-merge (large rounds, shj_text_merge_threshold exceeded) "
+        "Commit text-merge (large rounds, SHJ_TEXT_MERGE_THRESHOLD exceeded) "
         "— ShuffledHashJoin, zero Sort operators on the text payload",
         explain_str(merged),
     ))

@@ -155,17 +155,18 @@ def _corpus_of(c):
     return build_corpus(FixtureConfig())
 
 
-def test_shj_text_merge_identical(spark, crawl_result, tmp_path_factory):
+def test_shj_text_merge_identical(spark, crawl_result, tmp_path_factory, monkeypatch):
     """The large-round shuffled-hash text-merge path (normally gated on
     >100k fetched texts) commits bit-identical posts to the default
-    broadcast/SMJ path — forced on here via shj_text_merge_threshold=0."""
-    import dataclasses
+    broadcast/SMJ path — forced on here via SHJ_TEXT_MERGE_THRESHOLD=0."""
+    from eastmoneygubacrawler_spark.engine import crawl as C
 
     c = crawl_result
     store2 = SnapshotStore(str(tmp_path_factory.mktemp("store_shj")))
-    cfg2 = dataclasses.replace(c["cfg"], shj_text_merge_threshold=0)
+    monkeypatch.setattr(C, "SHJ_TEXT_MERGE_THRESHOLD", 0)
+    assert C.shj_text_merge_hint(1, 1.0, 8)  # the hint really applies
     m2 = run_crawl(
-        spark, store2, c["pages"], c["seeds"], c["robots"], c["politeness"], cfg2
+        spark, store2, c["pages"], c["seeds"], c["robots"], c["politeness"], c["cfg"]
     )
     assert m2["posts_new"] > 0
     ref = c["store"].load(spark, "posts")
@@ -183,3 +184,25 @@ def test_metrics_and_lineage(spark, crawl_result):
     stages = {r.stage for r in log.select("stage").distinct().collect()}
     assert {"list_fetch", "text_fetch"} <= stages
     assert log.filter(F.col("fetched") > 0).count() > 0
+
+
+def test_shj_text_merge_hint_sizes():
+    """The commit-time shuffled-hash gate prices the per-partition build
+    from the mean extracted-text bytes, floored at the AQE advisory
+    partition size, and withholds the hint when nothing was measured."""
+    from eastmoneygubacrawler_spark.engine.crawl import shj_text_merge_hint
+
+    mb64 = 64 * 1024 * 1024
+    # unmeasured mean: no hint, even for a large round
+    assert not shj_text_merge_hint(1_440_000, None, 32, mb64)
+    # small round: Catalyst broadcasts the tiny text side
+    assert not shj_text_merge_hint(2_700, 2048.0, 8, mb64)
+    # bigcorpus round, 1.44M texts at ~2 KB over 32 partitions: ~92 MB builds
+    assert shj_text_merge_hint(1_440_000, 2048.0, 32, mb64)
+    assert shj_text_merge_hint(1_440_000, 2048.0, 32, None)
+    # the r7 8x corpus, 11.5M texts over 32 partitions: ~736 MB builds OOM
+    assert not shj_text_merge_hint(11_500_000, 2048.0, 32, mb64)
+    # AQE coalescing may merge partitions up to the advisory size, so a
+    # small raw estimate does not pass under an over-budget advisory size
+    assert shj_text_merge_hint(200_000, 100.0, 200, None)
+    assert not shj_text_merge_hint(200_000, 100.0, 200, 8 * mb64)

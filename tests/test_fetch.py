@@ -341,13 +341,14 @@ def test_bounded_broadcast_round_equals_legacy_smj_round(spark, tmp_path):
 
 
 def test_size_aware_bc_cap_store_identity_and_plain_fetcher(spark, tmp_path, monkeypatch):
-    """r7 size-aware fetch strategy: with EGS_BOUNDED_BC_MAX_ROWS=1 every
+    """r7 size-aware fetch strategy: with BROADCAST_MAX_ROWS=1 every
     politeness wave exceeds the cap and falls back to the shuffle join —
     the committed store must be identical to the always-broadcast run.
     Also the restored fetcher protocol (ADVICE r6): a user fetcher with the
     plain fetch(batch) signature (no broadcast kwarg) works whenever the
     engine is not overriding (bounded_fetch_broadcast=False)."""
     from eastmoneygubacrawler_spark.engine import CrawlConfig, run_crawl
+    from eastmoneygubacrawler_spark.engine import crawl as C
     from eastmoneygubacrawler_spark.engine.fetch import FixtureFetcher
     from eastmoneygubacrawler_spark.fixtures import FixtureConfig, build_corpus
     from eastmoneygubacrawler_spark.schema import PAGES, ROBOTS, SEEDS
@@ -357,12 +358,12 @@ def test_size_aware_bc_cap_store_identity_and_plain_fetcher(spark, tmp_path, mon
     pages = spark.createDataFrame(corpus["pages"], PAGES)
     seeds = spark.createDataFrame(corpus["seeds"], SEEDS)
     robots = spark.createDataFrame(corpus["robots"], ROBOTS)
+    default_cap = C.BROADCAST_MAX_ROWS
 
     def run(name, cap, fetcher=None, bounded=True):
-        if cap is not None:
-            monkeypatch.setenv("EGS_BOUNDED_BC_MAX_ROWS", str(cap))
-        else:
-            monkeypatch.delenv("EGS_BOUNDED_BC_MAX_ROWS", raising=False)
+        monkeypatch.setattr(
+            C, "BROADCAST_MAX_ROWS", default_cap if cap is None else cap
+        )
         store = SnapshotStore(str(tmp_path / name))
         run_crawl(
             spark, store, pages, seeds, robots, None,
@@ -429,6 +430,7 @@ def test_auto_mode_selects_by_measured_html_size(spark, tmp_path):
     (≈40 KB pages, scan_extract measured 2.75x best at 56 KB) switches to
     scan_extract once the first round has recorded the measurement."""
     from eastmoneygubacrawler_spark.engine import CrawlConfig, run_crawl
+    from eastmoneygubacrawler_spark.engine.crawl import SCAN_EXTRACT_BYTES_THRESHOLD
     from eastmoneygubacrawler_spark.fixtures import FixtureConfig, build_corpus
     from eastmoneygubacrawler_spark.schema import PAGES, ROBOTS, SEEDS
     from eastmoneygubacrawler_spark.storage import SnapshotStore
@@ -445,7 +447,7 @@ def test_auto_mode_selects_by_measured_html_size(spark, tmp_path):
     m0 = run_crawl(spark, s1, pages, seeds, robots, None, cfg)
     assert m0["text_fetch_mode"] == "join"
     thin_mb = s1.meta()["mean_text_bytes"]
-    assert 0 < thin_mb <= cfg.scan_extract_bytes_threshold
+    assert 0 < thin_mb <= SCAN_EXTRACT_BYTES_THRESHOLD
     m1 = run_crawl(spark, s1, pages, seeds, robots, None, cfg)
     assert m1["text_fetch_mode"] == "join"
     n_thin = s1.load(spark, "posts").filter(F.col("full_text").isNotNull()).count()
@@ -462,7 +464,7 @@ def test_auto_mode_selects_by_measured_html_size(spark, tmp_path):
     s2 = SnapshotStore(str(tmp_path / "fat"))
     f0 = run_crawl(spark, s2, fat, seeds, robots, None, cfg)
     assert f0["text_fetch_mode"] == "join"  # cold start: nothing measured yet
-    assert s2.meta()["mean_text_bytes"] > cfg.scan_extract_bytes_threshold
+    assert s2.meta()["mean_text_bytes"] > SCAN_EXTRACT_BYTES_THRESHOLD
     f1 = run_crawl(spark, s2, fat, seeds, robots, None, cfg)
     assert f1["text_fetch_mode"] == "scan_extract"
     # padding altered neither extraction nor the crawl outcome

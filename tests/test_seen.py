@@ -183,6 +183,7 @@ def test_engine_incremental_bloom_index(spark, tmp_path):
     """The stored seen_bloom index after 2 rounds must equal a fresh build
     over the full seen table, and the bloom engine path stays == exact."""
     from eastmoneygubacrawler_spark.engine import CrawlConfig, run_crawl
+    from eastmoneygubacrawler_spark.engine.crawl import BLOOM_FPP
     from eastmoneygubacrawler_spark.fixtures import FixtureConfig, build_corpus
     from eastmoneygubacrawler_spark.schema import PAGES, ROBOTS, SEEDS
     from eastmoneygubacrawler_spark.storage import SnapshotStore
@@ -203,7 +204,7 @@ def test_engine_incremental_bloom_index(spark, tmp_path):
     fresh = {
         r.shard: (r.m, r.k, bytes(r.bits))
         for r in build_bloom_shards(
-            store.load(spark, "seen"), cfg.n_shards, fpp=cfg.bloom_fpp
+            store.load(spark, "seen"), cfg.n_shards, fpp=BLOOM_FPP
         ).collect()
     }
     assert stored == fresh
