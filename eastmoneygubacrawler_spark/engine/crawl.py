@@ -72,9 +72,6 @@ SHJ_TEXT_MERGE_THRESHOLD = 100_000
 # corpus (11.5M texts / 32 shuffle partitions ≈ 700 MB per build) where the
 # round died in the commit; SMJ spills gracefully there.
 SHJ_BUILD_BUDGET_BYTES = 256 * 1024 * 1024
-# bloom front-filter false-positive rate (seen_bloom and posts_bloom); part
-# of the persisted index geometry, so a change forces one rebuild
-BLOOM_FPP = 0.01
 MAX_WAVES = 64
 DUPLICATE_PAGE_THRESHOLD = 2  # core/crawler.py:104
 # X9 start year: the reference seeds inference with datetime.now().year
@@ -94,8 +91,8 @@ class CrawlConfig:
     use_bloom: bool = True
     # approximate-membership front-filter flavor: "bloom" (default) or
     # "cuckoo" (north-star structure: delete-capable, ~1 byte/key at 95%
-    # load — operators/cuckoo.py); both share the cogrouped probe shape and
-    # the exact anti-join confirms suspects either way
+    # load — operators/cuckoo.py); both are operators/seen.MembershipIndex
+    # flavors and the exact anti-join confirms suspects either way
     seen_filter: str = "bloom"
     max_depth: int = 2  # 0=list only, 1=+post text, 2=+paginated comments
     # fetch join strategy: broadcast the politeness-bounded batch (html never
@@ -131,6 +128,19 @@ class CrawlConfig:
     # round_seconds / delay_s; text fetches = max_qps × round_seconds
     # (P1 core/scheduler.py:245; P2 archive/full_text_CrawlerAsync.py:152)
     round_seconds: float = 3600.0
+
+    def __post_init__(self) -> None:
+        # an unknown string would otherwise silently run the fallback branch
+        # of each choice (bloom, join, descending order)
+        for name, allowed in (
+            ("seen_filter", SE.SEEN_FLAVORS),
+            ("text_fetch_mode", ("auto", "join", "scan_extract")),
+            ("crawl_order", ("asc", "desc")),
+        ):
+            if getattr(self, name) not in allowed:
+                raise ValueError(
+                    f"CrawlConfig.{name}={getattr(self, name)!r}; expected one of {allowed}"
+                )
 
 
 def shj_text_merge_hint(
@@ -264,41 +274,41 @@ def run_crawl(
     posts_prev = store.load(spark, "posts")
     seen_prev = store.load(spark, "seen")
     store_meta = store.meta()
-    # incremental bloom index: blobs persist in the store, so recrawl rounds
-    # never re-scan the full seen corpus to rebuild the front-filter — they
-    # OR-merge the round's delta blobs in (operators/seen.merge_bloom_shards).
-    # The manifest records the index geometry (n_shards, m, k) and the round
-    # it covers: a config drift (different --n-shards/--bloom-fpp) or a lag
-    # (a use_bloom=False round committed seen without the index) would
-    # otherwise probe wrong/stale blobs — bloom FALSE NEGATIVES, i.e. refetch
-    # of seen URLs and double MoR patches.  Drift/lag ⇒ rebuild from seen_prev.
-    bloom_prev = None
-    cuckoo_prev = None
-    bloom_geom = dict(
-        zip(("m", "k"), SE._bloom_params(SE.BLOOM_KEYS_PER_SHARD, BLOOM_FPP))
-    ) | {"n_shards": cfg.n_shards}
-    from ..operators import cuckoo as CK
-
-    cuckoo_geom = {"n_shards": cfg.n_shards, "slots": CK.SLOTS}
-
-    def _index_fresh(name: str, geom: dict) -> bool:
+    # persisted membership indexes (operators/seen.MembershipIndex): the
+    # URL-seen index and the posts-key index share one lifecycle — load or
+    # bootstrap here, probe in the gates, merge the round's delta in at
+    # commit — so recrawl rounds never re-scan a full corpus to rebuild a
+    # front-filter.  The manifest records each index's geometry and the
+    # round it covers: a config drift (different --n-shards) or a lag (a
+    # use_bloom=False round, or a purge a bloom cannot follow) would
+    # otherwise probe wrong/stale blobs — FALSE NEGATIVES, i.e. refetch of
+    # seen URLs and double MoR patches.  Drift/lag ⇒ rebuild, once.
+    def _index_fresh(idx: SE.MembershipIndex) -> bool:
         """A persisted index is usable only if its recorded geometry matches
         this round's and it covers the latest committed round."""
-        m = store_meta.get(name)
+        m = store_meta.get(idx.table)
         return (
             m is not None
-            and all(m.get(f) == v for f, v in geom.items())
+            and all(m.get(f) == v for f, v in idx.geometry.items())
             and m.get("round") == store.current_round()
         )
 
-    # the cuckoo flavor persists incrementally exactly like seen_bloom:
-    # blobs in the store, geometry + covered round in the manifest;
-    # drift/lag ⇒ rebuild from seen_prev (same contract)
-    if cfg.use_bloom and cfg.seen_filter == "cuckoo":
-        if _index_fresh("seen_cuckoo", cuckoo_geom):
-            cuckoo_prev = store.load(spark, "seen_cuckoo")
-    elif cfg.use_bloom and _index_fresh("seen_bloom", bloom_geom):
-        bloom_prev = store.load(spark, "seen_bloom")
+    def _load_index(idx, corpus_keys: DataFrame | None) -> DataFrame | None:
+        """The blobs this round probes and merges into: the stored ones when
+        fresh, else a bootstrap build from the previous corpus (one
+        O(corpus) distributed build, lazily checkpointed so the gates and
+        the commit-time merge reuse it un-recomputed — blob bytes are bounded
+        by geometry, never by corpus), else None (no index, or no corpus)."""
+        if idx is None:
+            return None
+        if _index_fresh(idx):
+            return store.load(spark, idx.table)
+        if corpus_keys is None:
+            return None
+        return idx.build(corpus_keys).localCheckpoint(eager=False)
+
+    seen_idx = SE.seen_index(cfg.seen_filter, cfg.n_shards) if cfg.use_bloom else None
+    seen_blobs = _load_index(seen_idx, seen_prev)
 
     if fetcher is None:
         from .fetch import FixtureFetcher
@@ -419,28 +429,18 @@ def run_crawl(
         posts_prev.select(*POSTS_KEY) if posts_prev is not None else None
     )
 
-    # posts-key bloom front-filter (r4 verdict item 2): the per-wave dedup
-    # against ALL previously-stored post keys gets the same treatment the
-    # URL-seen set already has — a persisted bloom keyed on
-    # xxhash64(stock, type, url_id) probes each wave's items, only bloom
-    # HITS (suspects ≈ the true re-listed duplicates) touch the exact
-    # posts-key corpus, and a suspect-free wave (the common case on a
-    # forward crawl) skips it entirely.  Geometry + covered round ride the
-    # manifest exactly like seen_bloom; drift or lag (e.g. the round after
-    # a purge — blooms cannot delete) ⇒ rebuild from posts_prev, once.
+    # posts-key index (r4 verdict item 2): the per-wave dedup against ALL
+    # previously-stored post keys gets the same treatment as the URL-seen
+    # set — the index keyed on xxhash64(stock, type, url_id) probes each
+    # wave's items, only HITS (suspects ≈ the true re-listed duplicates)
+    # touch the exact posts-key corpus, and a suspect-free wave (the common
+    # case on a forward crawl) skips it entirely.
     def _pkey_hash(df: DataFrame) -> DataFrame:
         return df.withColumn("url_hash", F.xxhash64(*POSTS_KEY))
 
-    pbloom = None
-    if cfg.use_bloom:
-        if _index_fresh("posts_bloom", bloom_geom):
-            pbloom = store.load(spark, "posts_bloom")
-        elif posts_keys_prev is not None:
-            # bootstrap: one O(corpus) distributed build this round, lazily
-            # checkpointed so the commit-time merge reuses it un-recomputed
-            pbloom = SE.build_bloom_shards(
-                _pkey_hash(posts_keys_prev), cfg.n_shards, fpp=BLOOM_FPP
-            ).localCheckpoint(eager=False)
+    pkeys_prev = _pkey_hash(posts_keys_prev) if posts_keys_prev is not None else None
+    posts_idx = SE.posts_key_index(cfg.n_shards) if cfg.use_bloom else None
+    posts_blobs = _load_index(posts_idx, pkeys_prev)
 
     # ---- wave loop over list pages ------------------------------------------
     # Politeness waves process each host's pages in canonical order, so within
@@ -531,11 +531,9 @@ def run_crawl(
         if round_keys is not None:
             firsts_wave = firsts_wave.join(round_keys, on=POSTS_KEY, how="left_anti")
         if posts_keys_prev is not None:
-            if pbloom is not None:
+            if posts_blobs is not None:
                 flagged = (
-                    SE.bloom_maybe_seen(
-                        _pkey_hash(firsts_wave), pbloom, cfg.n_shards
-                    )
+                    posts_idx.maybe_seen(_pkey_hash(firsts_wave), posts_blobs)
                     .drop("url_hash")
                     .localCheckpoint(eager=True)
                 )
@@ -551,7 +549,7 @@ def run_crawl(
                 # corpus is never scanned (measured: 0.27s vs 0.85s full
                 # scan on a 5M-key corpus).  The joins fold into the
                 # wave's existing firsts_wave eager checkpoint job, so the
-                # posts-bloom path adds zero driver actions.
+                # posts-key index path adds zero driver actions.
                 dup_keys = posts_keys_prev.join(
                     F.broadcast(suspects.select(*POSTS_KEY)),
                     on=POSTS_KEY, how="left_semi",
@@ -731,6 +729,14 @@ def run_crawl(
         cand = _with_url_identity(cand, cfg.n_salts)
         return FR.robots_gate(cand, robots) if robots is not None else cand
 
+    def _seen_gate(cand: DataFrame) -> DataFrame:
+        """Drop candidates already in the previous rounds' seen set: the
+        index front-filter with an exact confirm of its suspects, or the
+        exact anti-join alone when the round keeps no index."""
+        if seen_blobs is None:
+            return SE.filter_unseen(cand, seen_prev)
+        return seen_idx.filter_unseen(cand, seen_prev, seen_blobs)
+
     def _text_schedule(cand: DataFrame) -> tuple:
         """P2 politeness split of a gated candidate set.  Salted two-phase
         rank: the depth-1 frontier is the whole round's post list, ~all on
@@ -783,40 +789,8 @@ def run_crawl(
             return {}
         out: dict = {}
         cand = _gated(d1_cand)
-        # seen gate: bloom front-filter + exact anti-join (previously
-        # extracted URLs never refetched)
-        if seen_prev is not None:
-            if cfg.use_bloom and cfg.seen_filter == "cuckoo":
-                # stored blobs win (O(delta) per round); the full-corpus
-                # build runs only on bootstrap and is checkpointed so the
-                # commit-path merge reuses it (seen_bloom parity)
-                if cuckoo_prev is not None:
-                    shards = cuckoo_prev
-                else:
-                    shards = out["bootstrap_cuckoo"] = CK.build_cuckoo_shards(
-                        seen_prev, cfg.n_shards, headroom=2.0
-                    ).localCheckpoint(eager=False)
-                cand = CK.filter_unseen_with_cuckoo(
-                    cand, seen_prev, shards, cfg.n_shards
-                )
-            elif cfg.use_bloom:
-                # stored blobs win (O(delta) maintenance); full build only on
-                # bootstrap (no index yet / stale geometry).  Checkpoint that
-                # bootstrap build — blob bytes are bounded by geometry
-                # (n_shards × m/8), never by corpus — so the commit path can
-                # reuse it instead of scanning the full seen corpus a second
-                # time in the same round.
-                if bloom_prev is not None:
-                    shards = bloom_prev
-                else:
-                    shards = out["bootstrap_blooms"] = SE.build_bloom_shards(
-                        seen_prev, cfg.n_shards, fpp=BLOOM_FPP
-                    ).localCheckpoint(eager=False)
-                cand = SE.filter_unseen_with_bloom(
-                    cand, seen_prev, shards, cfg.n_shards
-                )
-            else:
-                cand = SE.filter_unseen(cand, seen_prev)
+        # previously extracted URLs are never refetched
+        cand = _seen_gate(cand)
         scheduled, unscheduled = _text_schedule(cand)
         if text_mode == "scan_extract":
             from .fetch import scan_extract
@@ -1140,27 +1114,15 @@ def run_crawl(
         .withColumn("round", F.lit(round_id))
         .select("url_hash", "url", "shard", "round")
     )
-    if seen_prev is not None:
-        # delta-only append: urls already in the seen set are not re-written.
-        # With a fresh bloom index the probe pre-prunes: rows the filter has
-        # never seen (the vast majority of a round's delta) skip the exact
-        # anti-join against the FULL seen corpus — only the few-% suspects
-        # (bloom hits) touch it, exactly like the d1 gate above.  O(delta)
-        # instead of O(corpus-join) per round.
-        if bloom_prev is not None:
-            seen_new = SE.filter_unseen_with_bloom(
-                seen_new, seen_prev, bloom_prev, cfg.n_shards
-            )
-        elif cuckoo_prev is not None:
-            seen_new = CK.filter_unseen_with_cuckoo(
-                seen_new, seen_prev, cuckoo_prev, cfg.n_shards
-            )
-        else:
-            seen_new = seen_new.join(seen_prev.select("url"), on="url", how="left_anti")
-        seen_new = seen_new.select("url_hash", "url", "shard", "round")
+    # delta-only append: urls already in the seen set are not re-written.
+    # With an index the probe pre-prunes: rows it has never seen (the vast
+    # majority of a round's delta) skip the exact anti-join against the
+    # FULL seen corpus — only the few-% suspects touch it, exactly like the
+    # d1 gate.  O(delta) instead of O(corpus-join) per round.
+    seen_new = _seen_gate(seen_new)
     if cfg.use_bloom:
-        # seen_new feeds TWO commit jobs (the seen delta write and the bloom
-        # delta-blob build); materialize once or the whole probe/anti-join
+        # seen_new feeds TWO commit jobs (the seen delta write and the index
+        # delta merge); materialize once or the whole probe/anti-join
         # plan executes twice inside the commit wall
         seen_new = seen_new.localCheckpoint(eager=True)
     appends["seen"] = seen_new
@@ -1246,86 +1208,25 @@ def run_crawl(
     elif "posts_rows" not in store_meta and posts_prev is None:
         commit_meta["posts_rows"] = 0
 
-    def _index_base(prev, bootstrap, build):
-        """The URL index this round's delta merges into: the stored blobs,
-        else the d1 gate's checkpointed bootstrap build when it ran (a second
-        full seen scan in the same round is pure waste), else a full build."""
-        if prev is not None or seen_prev is None:
-            return prev
-        return bootstrap if bootstrap is not None else build(seen_prev)
-
-    if cfg.use_bloom and cfg.seen_filter == "cuckoo":
-        # maintain the cuckoo index incrementally: the round's seen delta is
-        # INSERTED into the stored per-shard tables (the delete-capable
-        # structure's native delta-merge); a shard that outgrew its table
-        # passes through flagged and is rebuilt resized from the full corpus
-        # — only that shard, only when it actually fills.
-        base = _index_base(
-            cuckoo_prev, d1.get("bootstrap_cuckoo"),
-            lambda df: CK.build_cuckoo_shards(df, cfg.n_shards, headroom=2.0),
-        )
-        if base is None:
-            blobs = CK.build_cuckoo_shards(seen_new, cfg.n_shards, headroom=2.0)
-        else:
-            # checkpoint: rebuild_overflowed_shards probes the merged blobs
-            # (head over the flag column) and then writes them — without the
-            # checkpoint the cogrouped merge would execute twice
-            merged = CK.merge_cuckoo_shards(
-                base, seen_new, cfg.n_shards
-            ).localCheckpoint(eager=True)
-            seen_all = (
-                seen_prev.select("url_hash").unionByName(
-                    seen_new.select("url_hash")
-                )
-                if seen_prev is not None
-                else seen_new.select("url_hash")
-            )
-            blobs = CK.rebuild_overflowed_shards(merged, seen_all, cfg.n_shards)
-        snapshots["seen_cuckoo"] = blobs
-        commit_meta["seen_cuckoo"] = {**cuckoo_geom, "round": round_id}
-    elif cfg.use_bloom:
-        # maintain the bloom index incrementally: blobs for THIS round's seen
-        # delta, OR-merged into the stored blob set (identical geometry).  At
-        # sandbox sizing the snapshot is ~15 MB; a 10^4-shard deployment
-        # would delta-commit only touched shards — same merge operator.
-        delta_blobs = SE.build_bloom_shards(seen_new, cfg.n_shards, fpp=BLOOM_FPP)
-        base = _index_base(
-            bloom_prev, d1.get("bootstrap_blooms"),
-            lambda df: SE.build_bloom_shards(df, cfg.n_shards, fpp=BLOOM_FPP),
-        )
-        blobs = (
-            delta_blobs if base is None else SE.merge_bloom_shards(base, delta_blobs)
-        )
-        snapshots["seen_bloom"] = blobs
-        commit_meta["seen_bloom"] = {**bloom_geom, "round": round_id}
-
-    if cfg.use_bloom:
-        # posts-key bloom maintained incrementally alongside the URL index:
-        # delta blobs from this round's new post keys, OR-merged into the
-        # stored/bootstrap blobs.  Committed every bloom round so the
-        # freshness check (covered round == store round) holds; a purge
-        # round skips this commit and the resulting lag forces a one-time
-        # rebuild from the post-purge posts table (blooms cannot delete).
-        # At sandbox sizing the snapshot is small; a 10^4-shard deployment
-        # delta-commits only touched shards — same merge operator.
-        pk_delta = (
-            SE.build_bloom_shards(
-                _pkey_hash(posts_new.select(*POSTS_KEY)),
-                cfg.n_shards, fpp=BLOOM_FPP,
-            )
-            if n_posts_new > 0
-            else None
-        )
-        if pbloom is not None and pk_delta is not None:
-            pblobs = SE.merge_bloom_shards(pbloom, pk_delta)
-        else:
-            pblobs = pk_delta if pk_delta is not None else pbloom
-        if pblobs is not None:
-            snapshots["posts_bloom"] = pblobs
-            commit_meta["posts_bloom"] = {**bloom_geom, "round": round_id}
+    # each index merges this round's delta keys into its base (stored or
+    # bootstrap blobs) and commits as a snapshot with geometry + covered
+    # round.  Committed every index round so the freshness check holds; a
+    # round without new post keys carries the posts-key blobs forward.  At
+    # sandbox sizing a snapshot is ~15 MB; a 10^4-shard deployment would
+    # delta-commit only touched shards — same merge operator.
+    for idx, base, delta, corpus in (
+        (seen_idx, seen_blobs, seen_new, seen_prev),
+        (posts_idx, posts_blobs,
+         _pkey_hash(posts_new.select(*POSTS_KEY)) if n_posts_new > 0 else None,
+         pkeys_prev),
+    ):
+        blobs = None if idx is None else idx.merge(base, delta, corpus)
+        if blobs is not None:
+            snapshots[idx.table] = blobs
+            commit_meta[idx.table] = {**idx.geometry, "round": round_id}
 
     _mark('assemble')
-    # frontier (small cross-round state) and the bloom index are snapshot
+    # frontier (small cross-round state) and the indexes are snapshot
     # tables; everything else commits as an append-only delta
     store.commit(
         round_id,

@@ -13,13 +13,18 @@ the store.  One call removes a URL set from every stateful surface:
 - **frontier / frontier_failed**: the frontier snapshot is O(active) and is
   filtered + rewritten (its normal per-round cost); frontier_failed takes an
   equality delete like the other append tables.
-- **seen_cuckoo**: purged keys are DELETED from the stored per-shard tables
-  in place (operators/cuckoo.delete_from_cuckoo_shards) — the index stays
-  fresh through the purge, no rebuild.  This is the cuckoo's structural win.
-- **seen_bloom**: a bloom cannot delete (bits are shared), so the purge
-  drops the index from the manifest meta — the next crawl round detects the
-  lag and rebuilds from the (now-smaller) seen table.  The asymmetry is the
-  point, and it is recorded in the returned metrics.
+- **the URL-seen index** (operators/seen.MembershipIndex), asked whether it
+  can delete:
+  - the cuckoo flavor (``seen_cuckoo``) can: purged keys are DELETED from
+    the stored per-shard tables in place — the index stays fresh through
+    the purge, no rebuild.  This is the cuckoo's structural win.
+  - the bloom flavor (``seen_bloom``) cannot (bits are shared), so the purge
+    leaves its covered round behind the store round — the next crawl round
+    detects the lag and rebuilds from the (now-smaller) seen table.
+  The asymmetry is the point, and it is recorded in the returned metrics.
+  Deletes always use the geometry recorded in the manifest: a delete routed
+  to the wrong shard can strip another key's fingerprint, a false negative
+  the index's meta would never reveal.
 
 Purged URLs become refetchable: they are gone from ``seen``, so the next
 round's gate schedules them again — the purge is also the "force recrawl
@@ -36,7 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import urls as U
-from ..operators import cuckoo as CK
+from ..operators import seen as SE
 from ..storage.backend import SnapshotStore
 
 
@@ -44,13 +49,10 @@ def purge_urls(
     spark: SparkSession,
     store: SnapshotStore,
     urls: DataFrame,
-    n_shards: int | None = None,
 ) -> dict:
     """Remove ``urls`` (a 1-column ``url`` DataFrame, any casing/fragments —
     canonicalized here) from posts/seen/comments/frontier state.  Commits one
     store round; returns metrics.
-
-    ``n_shards``: cuckoo index geometry, defaulted from the manifest meta.
     """
     # the FULL canonicalized purge list drives the posts/frontier deletes:
     # a url can sit in posts metadata or frontier retry state without ever
@@ -112,24 +114,23 @@ def purge_urls(
         )
 
     store_meta = store.meta()
-    cuckoo_kept_fresh = False
-    cm = store_meta.get("seen_cuckoo")
-    if cm is not None and cm.get("round") == store.current_round():
-        shards = store.load(spark, "seen_cuckoo")
-        if shards is not None:
-            ns = n_shards or cm["n_shards"]
-            snapshots["seen_cuckoo"] = CK.delete_from_cuckoo_shards(
-                shards, purged_seen, ns
-            )
-            meta["seen_cuckoo"] = {**cm, "round": round_id}
-            cuckoo_kept_fresh = True
-    bloom_invalidated = False
-    bm = store_meta.get("seen_bloom")
-    if bm is not None and bm.get("round") == store.current_round():
-        # a bloom cannot delete: leave the stale blobs (meta round now lags
-        # the store round, so the next crawl's freshness check rebuilds from
-        # the post-purge seen table)
-        bloom_invalidated = True
+    kept_fresh = invalidated = False
+    for table in SE.SEEN_INDEX_TABLES:
+        im = store_meta.get(table)
+        if im is None or im.get("round") != store.current_round():
+            continue
+        idx = SE.membership_index(table, im["n_shards"])
+        if not idx.can_delete:
+            # leave the stale blobs: the meta round now lags the store
+            # round, so the next crawl's freshness check rebuilds from the
+            # post-purge seen table
+            invalidated = True
+            continue
+        blobs = store.load(spark, table)
+        if blobs is not None:
+            snapshots[table] = idx.delete(blobs, purged_seen)
+            meta[table] = {**im, "round": round_id}
+            kept_fresh = True
 
     # posts_rows is deliberately NOT decremented: it is the HIGH-WATER
     # insertion count that seeds crawl_seq, and reusing a purged row's
@@ -142,8 +143,8 @@ def purge_urls(
         "round": round_id,
         "urls_purged": n_purged,          # full canonicalized request list
         "urls_purged_seen": n_purged_seen,  # subset that was in seen
-        "cuckoo_kept_fresh": cuckoo_kept_fresh,
-        "bloom_invalidated": bloom_invalidated,
+        "cuckoo_kept_fresh": kept_fresh,
+        "bloom_invalidated": invalidated,
     }
 
 
@@ -151,7 +152,6 @@ def purge_hosts(
     spark: SparkSession,
     store: SnapshotStore,
     hosts: list[str],
-    n_shards: int | None = None,
 ) -> dict:
     """Retire whole hosts (the north star's "purged hosts" case): every url
     of the given hosts, from EVERY url-bearing surface, goes through
@@ -176,4 +176,4 @@ def purge_hosts(
     from functools import reduce
 
     urls = reduce(lambda a, b: a.unionByName(b), per_table)
-    return purge_urls(spark, store, urls, n_shards=n_shards)
+    return purge_urls(spark, store, urls)

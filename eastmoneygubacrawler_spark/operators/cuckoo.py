@@ -17,8 +17,9 @@ CoNEXT 2014 — public paper): fingerprint f = 8-bit nonzero hash of the key;
 two candidate buckets i1 = h(key) mod m, i2 = i1 XOR h(f) mod m; insert into
 any free slot, else evict-and-relocate up to MAX_KICKS.  Everything below is
 vectorized numpy inside ``applyInPandas`` tasks — one task per shard, one
-blob row per shard, cogrouped probe identical in shape to seen.py's bloom
-(blobs never transit the driver).
+blob row per shard, probed through seen.py's shared cogrouped probe (blobs
+never transit the driver).  :class:`CuckooIndex` is this flavor of
+seen.py's ``MembershipIndex``.
 
 Derivations all start from the engine's single xxhash64 url_hash, so the
 filter is keyed by canonicalized URL hash exactly like the exact layer.
@@ -31,10 +32,13 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .seen import with_shard
+from .seen import MembershipIndex, cogroup_probe, with_shard
 
 SLOTS = 4  # slots per bucket
 MAX_KICKS = 500
+# the engine builds and rebuilds at 2× so a fresh shard absorbs several
+# rounds of delta growth before its one-off rebuild
+ENGINE_HEADROOM = 2.0
 
 
 def _fingerprints(h: np.ndarray) -> np.ndarray:
@@ -225,7 +229,7 @@ def merge_cuckoo_shards(
             # same 2x headroom as bootstrap/rebuild: a mid-stream fresh shard
             # sized at 1x sits near full load and would overflow (→ full
             # rebuild) on its very next delta
-            table = build_table(h, m=_table_size(max(1, int(len(h) * 2.0))))
+            table = build_table(h, m=_table_size(max(1, int(len(h) * ENGINE_HEADROOM))))
             shard = int(cdf["shard"].iloc[0])
             return pd.DataFrame(
                 {"shard": [shard], "m": [table.shape[0]],
@@ -320,72 +324,58 @@ def rebuild_overflowed_shards(
     if not bad_rows:
         return good
     bad = [int(r.shard) for r in bad_rows]
-    rebuilt = (
-        with_shard(seen_all.select("url_hash"), n_shards)
-        .filter(F.col("shard").isin(bad))
-        .groupBy("shard")
-        .applyInPandas(
-            lambda pdf: _rebuild_one(pdf), "shard int, m long, table binary"
-        )
+    # 2× headroom: these shards just overflowed, so size the replacements to
+    # absorb several more rounds of delta growth before the next rebuild
+    rebuilt = build_cuckoo_shards(
+        with_shard(seen_all.select("url_hash"), n_shards).filter(
+            F.col("shard").isin(bad)
+        ),
+        n_shards, headroom=ENGINE_HEADROOM,
     )
     return good.unionByName(rebuilt)
 
 
-def _rebuild_one(pdf: pd.DataFrame) -> pd.DataFrame:
-    h = pdf["url_hash"].to_numpy(np.int64)
-    # 2× headroom: this shard just overflowed, so size the replacement to
-    # absorb several more rounds of delta growth before the next rebuild
-    table = build_table(h, m=_table_size(max(1, int(len(h) * 2.0))))
-    return pd.DataFrame(
-        {"shard": [int(pdf["shard"].iloc[0])], "m": [table.shape[0]],
-         "table": [table.tobytes()]}
-    )
+def _cuckoo_hit(bdf: pd.DataFrame, h: np.ndarray) -> np.ndarray:
+    m = int(bdf["m"].iloc[0])
+    table = np.frombuffer(bdf["table"].iloc[0], dtype=np.uint8).reshape(m, SLOTS)
+    return contains(table, h)
 
 
 def cuckoo_maybe_seen(df: DataFrame, shards: DataFrame, n_shards: int) -> DataFrame:
-    """Adds ``maybe_seen`` by cogrouping candidates with their shard's blob.
+    """:func:`~.seen.cogroup_probe` over cuckoo blobs (shard, m, table).
     No false negatives; suspects go to the exact anti-join."""
-    from pyspark.sql.types import BooleanType, StructField, StructType
-
-    added_shard = "shard" not in df.columns
-    cand = with_shard(df, n_shards) if added_shard else df
-    out_schema = StructType(
-        list(df.schema.fields) + [StructField("maybe_seen", BooleanType())]
-    )
-    out_cols = [f.name for f in out_schema.fields]
-
-    def _probe(cdf: pd.DataFrame, bdf: pd.DataFrame) -> pd.DataFrame:
-        h = cdf["url_hash"].to_numpy(np.int64)
-        if len(bdf) == 0:
-            hit = np.zeros(len(h), dtype=bool)
-        else:
-            m = int(bdf["m"].iloc[0])
-            table = np.frombuffer(bdf["table"].iloc[0], dtype=np.uint8).reshape(
-                m, SLOTS
-            )
-            hit = contains(table, h)
-        out = cdf.copy()
-        out["maybe_seen"] = hit
-        if added_shard:
-            out = out.drop(columns=["shard"])
-        return out[out_cols]
-
-    return (
-        cand.groupBy("shard")
-        .cogroup(shards.groupBy("shard"))
-        .applyInPandas(_probe, out_schema)
-    )
+    return cogroup_probe(df, shards, n_shards, _cuckoo_hit)
 
 
-def filter_unseen_with_cuckoo(
-    candidates: DataFrame, seen: DataFrame | None, shards: DataFrame, n_shards: int
-) -> DataFrame:
-    """Two-layer dedup, cuckoo front-filter + exact confirm of suspects."""
-    from .seen import filter_unseen
+class CuckooIndex(MembershipIndex):
+    """Cuckoo blobs (shard, m, table): a round's delta is inserted in place;
+    a shard that overflows is rebuilt resized from its full key set — only
+    that shard, only when it actually fills; purged keys are deleted in
+    place."""
 
-    if seen is None:
-        return candidates
-    flagged = cuckoo_maybe_seen(candidates, shards, n_shards)
-    definitely_new = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
-    suspects = flagged.filter(F.col("maybe_seen")).drop("maybe_seen")
-    return definitely_new.unionByName(filter_unseen(suspects, seen))
+    can_delete = True
+    hit = staticmethod(_cuckoo_hit)
+
+    @property
+    def geometry(self) -> dict:
+        return {"n_shards": self.n_shards, "slots": SLOTS}
+
+    def build(self, keys: DataFrame) -> DataFrame:
+        return build_cuckoo_shards(keys, self.n_shards, headroom=ENGINE_HEADROOM)
+
+    def merge(self, base, delta_keys, corpus_keys):
+        if base is None or delta_keys is None:
+            return base if delta_keys is None else self.build(delta_keys)
+        # checkpoint: rebuild_overflowed_shards probes the merged blobs (head
+        # over the flag column) and then they are written — without it the
+        # cogrouped merge would execute twice
+        merged = merge_cuckoo_shards(
+            base, delta_keys, self.n_shards
+        ).localCheckpoint(eager=True)
+        all_keys = delta_keys.select("url_hash")
+        if corpus_keys is not None:
+            all_keys = corpus_keys.select("url_hash").unionByName(all_keys)
+        return rebuild_overflowed_shards(merged, all_keys, self.n_shards)
+
+    def delete(self, blobs: DataFrame, keys: DataFrame) -> DataFrame:
+        return delete_from_cuckoo_shards(blobs, keys, self.n_shards)

@@ -206,3 +206,16 @@ def test_shj_text_merge_hint_sizes():
     # small raw estimate does not pass under an over-budget advisory size
     assert shj_text_merge_hint(200_000, 100.0, 200, None)
     assert not shj_text_merge_hint(200_000, 100.0, 200, 8 * mb64)
+
+
+@pytest.mark.parametrize("field, bad", [
+    ("seen_filter", "quotient"),
+    ("seen_filter", "Bloom"),
+    ("text_fetch_mode", "scan"),
+    ("crawl_order", "descending"),
+])
+def test_config_rejects_unknown_choice(field, bad):
+    """A misspelt choice must fail loudly instead of silently running the
+    fallback branch (bloom, join, descending order)."""
+    with pytest.raises(ValueError, match=field):
+        CrawlConfig(**{field: bad})

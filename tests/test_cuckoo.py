@@ -10,9 +10,8 @@ from eastmoneygubacrawler_spark.operators.cuckoo import (
     contains,
     cuckoo_maybe_seen,
     delete,
-    filter_unseen_with_cuckoo,
 )
-from eastmoneygubacrawler_spark.operators.seen import filter_unseen
+from eastmoneygubacrawler_spark.operators.seen import filter_unseen, seen_index
 
 
 def _hashes(n, seed=7):
@@ -55,7 +54,8 @@ def test_two_layer_filter_equals_exact(spark):
     shards = build_cuckoo_shards(seen, n_shards)
     assert shards.columns == ["shard", "m", "table"]
     via_cuckoo = sorted(
-        r.url for r in filter_unseen_with_cuckoo(cands, seen, shards, n_shards).collect()
+        r.url
+        for r in seen_index("cuckoo", n_shards).filter_unseen(cands, seen, shards).collect()
     )
     via_exact = sorted(r.url for r in filter_unseen(cands, seen).collect())
     assert via_cuckoo == via_exact
